@@ -8,6 +8,7 @@ import graft.index.CellGrid
 import graft.operators.{ConnectedComponents, Dedup, Similarity, SpatialJoin, TextAnalysis, Tiling}
 import graft.indicators.{BuildingIndicators, GenericIndicators, RsuIndicators}
 import graft.fixtures.GeoFixture
+import graft.sources.Tables
 
 /**
  * Driver-verified query surface: each entry pairs a Spark implementation
@@ -26,9 +27,6 @@ import graft.fixtures.GeoFixture
  */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** The engine's index grid for fixture-plane data. Res 10 → 32-unit cells,
     * comparable to the 50-100 unit fixture zones. */
   private val grid = CellGrid.fixture
@@ -36,7 +34,7 @@ object Queries {
 
   // ---- deterministic geocode of documents (pure Catalyst, codegen'd) ------
   private[graft] def docPoints(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id"), col("n_chars"),
       ((col("doc_id") * 1103515245L + 12345L) % 2147483648L % 55000L).cast("double") / 1000.0 as "x",
       (((col("doc_id") * 69069L + 1L) % 2147483648L % 55000L).cast("double") / 1000.0 - 15.0) as "y")
@@ -69,7 +67,7 @@ object Queries {
     * integer-coordinate rectangles (so the DuckDB oracle can recompute every
     * JTS measure with plain arithmetic). */
   private def docBuildings(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_build"),
       (col("doc_id") % 50).cast("double").as("x0"),
       ((col("doc_id") * 7) % 50).cast("double").as("y0"),
@@ -92,7 +90,7 @@ object Queries {
     * recomputable in SQL: hull area = w·h − nw·nh/2, hull perimeter =
     * 2(w+h) − nw − nh + √(nw²+nh²). */
   private def docLShapes(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(
+    val d = Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_build"),
       (col("doc_id") % 40).cast("double").as("x0"),
       ((col("doc_id") * 3) % 40).cast("double").as("y0"),
@@ -128,7 +126,7 @@ object Queries {
     // -- relational baseline (unweightedOperationFromLowerScale analogue:
     //    SUM/AVG/COUNT hash aggregate — GenericIndicators.groovy:57-125) ----
     "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(sum(col("l_quantity")).as("sum_qty"),
           sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_price_cents"),
@@ -139,9 +137,9 @@ object Queries {
     // -- multi-table id join + agg + top-k (DataUtils.groovy:40-87 joinTables
     //    + SURVEY §2.6 top-k) ----------------------------------------------
     "q2_join_topk" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
+      val li = Tables.read(s, dir, "lineitem")
+      val o = Tables.read(s, dir, "orders")
+      val c = Tables.read(s, dir, "customer")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .groupBy("c_mktsegment")
@@ -153,7 +151,7 @@ object Queries {
     // -- window/top-1-per-group (the decorrelated ORDER BY ... LIMIT 1 —
     //    SpatialUnits.groovy:500-511 -> max_by, SURVEY §4) ------------------
     "q3_window_top1" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables.read(s, dir, "orders")
       val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), col("o_orderkey"))
       o.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("o_custkey"), col("o_orderkey"))
@@ -162,8 +160,8 @@ object Queries {
 
     // -- left anti join (reference NOT IN subquery — RsuIndicators.groovy:494) --
     "q4_anti_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").where(col("o_totalprice") > 400000.0)
+      val c = Tables.read(s, dir, "customer")
+      val o = Tables.read(s, dir, "orders").where(col("o_totalprice") > 400000.0)
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_mktsegment"))
         .orderBy("c_custkey")
@@ -224,13 +222,13 @@ object Queries {
     // -- exact deduplication (fixed-width digest-keyed groupBy — the text
     //    bytes never ride the shuffle; see Dedup.exact) ---------------------
     "dedup_exact" -> ((s, dir) => {
-      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
+      Dedup.exact(Tables.read(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     }),
 
     // -- text analysis: token count + length + whitespace ratio ------------
     "text_stats" -> ((s, dir) => {
-      t(s, dir, "documents").select(
+      Tables.read(s, dir, "documents").select(
           col("doc_id"),
           size(split(col("text"), " ", -1)).cast("long").as("n_tokens"),
           length(col("text")).cast("long").as("len_chars"),
@@ -263,7 +261,7 @@ object Queries {
     //    per-zone sum/avg with empty-zone 0 defaults --------------------------
     "agg_scale_transfer" -> ((s, dir) => {
       import graft.indicators.GenericIndicators._
-      val lower = t(s, dir, "documents")
+      val lower = Tables.read(s, dir, "documents")
         .select(col("doc_id"), (col("doc_id") % 20).as("id_zone"), col("n_chars"))
       val upper = s.range(0, 25).toDF("id_zone")
       unweightedOperationFromLowerScale(lower, upper, "id_zone", "doc_id",
@@ -274,7 +272,7 @@ object Queries {
 
     // -- RSU projections: aspect ratio + Davenport roughness class ----------
     "rsu_projection" -> ((s, dir) => {
-      val rsu = t(s, dir, "documents").select(
+      val rsu = Tables.read(s, dir, "documents").select(
         col("doc_id").as("id_rsu"),
         ((col("doc_id") % 101).cast("double") / 100.0).as("dens"),
         ((col("doc_id") % 50).cast("double") / 100.0).as("facade"),
@@ -290,7 +288,7 @@ object Queries {
     // -- tumbling-window aggregation over the events table (batch analogue
     //    of the streaming windowed agg) -------------------------------------
     "events_window" -> ((s, dir) => {
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour").getField("start").as("win_start"),
           col("event_type"))
         .agg(count(lit(1)).as("cnt"),
@@ -301,7 +299,7 @@ object Queries {
     // -- sessionization: 30-min-gap sessions per user (lag window) ----------
     "events_sessions" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .withColumn("prev_ts", lag(col("ts"), 1).over(w))
         .withColumn("new_sess",
           when(col("prev_ts").isNull ||
@@ -314,14 +312,14 @@ object Queries {
 
     // -- exact n-gram Jaccard near-dup join (inverted-index candidates) -----
     "dedup_ngram_jaccard" -> ((s, dir) => {
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", k = 3, threshold = 0.12)
+      Dedup.ngramJaccardPairs(Tables.read(s, dir, "documents"), "doc_id", "text", k = 3, threshold = 0.12)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 9).as("jaccard"))
         .orderBy("id_a", "id_b")
     }),
 
     // -- brute-force cosine top-k over embeddings ---------------------------
     "ann_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = Tables.read(s, dir, "embeddings")
       val queries = emb.where(col("vec_id").isin(1L, 7L, 42L, 99L, 123L))
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
@@ -331,7 +329,7 @@ object Queries {
 
     // -- language id + quality scoring (pure-Catalyst text pipeline) --------
     "text_analysis" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("doc_id"),
           TextAnalysis.langId(col("text")).as("lang_id"),
           TextAnalysis.qualityScore(col("text")).as("quality"))
@@ -341,7 +339,7 @@ object Queries {
     // -- connected components over the rectangle-intersects graph
     //    (blocks operator; oracle = recursive-CTE transitive closure) -------
     "blocks_cc" -> ((s, dir) => {
-      val rects = t(s, dir, "documents").select(
+      val rects = Tables.read(s, dir, "documents").select(
         col("doc_id").as("id_build"),
         ((col("doc_id") * 13) % 60).cast("double").as("x0"),
         ((col("doc_id") * 29) % 60).cast("double").as("y0"))

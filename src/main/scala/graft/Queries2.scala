@@ -8,6 +8,7 @@ import graft.indicators.{BlockIndicators, BuildingIndicators, GenericIndicators,
 import graft.lake.Pages
 import graft.operators.{Dedup, Multimodal, Similarity, SpatialJoin, TextAnalysis, Tiling}
 import graft.fixtures.GeoFixture
+import graft.sources.Tables
 
 /**
  * Second driver-verified query batch: the remaining SURVEY.md §2 operator
@@ -26,9 +27,6 @@ import graft.fixtures.GeoFixture
  */
 object Queries2 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   private val grid = CellGrid.fixture
   private val Res = 10
 
@@ -45,7 +43,7 @@ object Queries2 {
   private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame = {
     lshPairsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     lshPairsCache.computeIfAbsent((s, dir), _ =>
-      Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashLsh(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, bands = 16, rowsPerBand = 3, threshold = 0.4,
         maxBucket = Some(4096)).localCheckpoint())
   }
@@ -56,7 +54,7 @@ object Queries2 {
   // intersects self-join has real neighbor structure but zero area overlaps
   // (shared walls are 1-D segments — exactly the reference fixture's shape).
   private def rectLayer(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_build"),
       (col("doc_id") % 40 * 5).cast("double").as("x0"),
       (floor(col("doc_id") / 40) * 5).cast("double").as("y0"),
@@ -114,7 +112,7 @@ object Queries2 {
 
   /** Small rectangles scattered over [0,150)² (cross zone boundaries). */
   private def scatterRects(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_build"),
       (col("doc_id") * 7 % 140).cast("double").as("bx"),
       (col("doc_id") * 13 % 140).cast("double").as("by"),
@@ -229,7 +227,7 @@ object Queries2 {
   private val RefLczWeightSql =
     "CASE lcz WHEN 101 THEN 14 WHEN 104 THEN 16 WHEN 107 THEN 12 ELSE lcz END"
   private def gridCells(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       (col("doc_id") % 25 + 1).as("id_row"),
       (floor(col("doc_id") / 25).cast("long") + 1).as("id_col"),
       element_at(lit(LczVals), (col("doc_id") % 7 + 1).cast("int")).as("lcz"))
@@ -275,7 +273,7 @@ object Queries2 {
 
     // -- weighted mean + weighted std per zone (GenericIndicators.groovy:148-212) --
     "agg_weighted" -> ((s, dir) => {
-      val lower = t(s, dir, "documents").select(
+      val lower = Tables.read(s, dir, "documents").select(
         (col("doc_id") % 20).as("id_zone"),
         col("n_chars").cast("double").as("nc"),
         (col("doc_id") % 5 + 1).cast("double").as("wt"))
@@ -305,7 +303,7 @@ object Queries2 {
     // -- distribution characterization: Perkins Skill Score / uniqueness /
     //    extremum over an array (GenericIndicators.groovy:448-646) ----------
     "distribution_char" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
+      val d = Tables.read(s, dir, "documents").select(col("doc_id"),
         array((col("doc_id") % 7).cast("double"),
           (col("doc_id") * 3 % 11).cast("double"),
           (col("doc_id") * 5 % 13).cast("double"),
@@ -369,7 +367,7 @@ object Queries2 {
     "rsu_road_density" -> ((s, dir) => {
       val zones = Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_rsu"), col("the_geom"))
-      val d = t(s, dir, "documents").select(col("doc_id"),
+      val d = Tables.read(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") * 11 % 150).cast("double").as("rx"),
         (col("doc_id") * 17 % 150).cast("double").as("ry"),
         (col("doc_id") % 20 + 5).cast("double").as("len"))
@@ -534,7 +532,7 @@ object Queries2 {
       val zones = Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_rsu"), col("the_geom"))
       val b = rectLayer(s, dir).select("the_geom")
-      val veg = t(s, dir, "documents").where(col("doc_id") < 400).select(
+      val veg = Tables.read(s, dir, "documents").where(col("doc_id") < 400).select(
         (col("doc_id") % 20 * 7).cast("double").as("vx"),
         (floor(col("doc_id") / 20) % 20 * 7).cast("double").as("vy"),
         (col("doc_id") % 5 + 2).cast("double").as("vw"),
@@ -591,7 +589,7 @@ object Queries2 {
     // -- schema-aligning union with null padding (DataUtils.groovy:195-210
     //    unionTables -> unionByName(allowMissingColumns)) -------------------
     "set_union_pad" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Tables.read(s, dir, "documents")
       val a = d.select(col("doc_id"), col("n_chars"))
       val b = d.select((col("doc_id") + 1000000).as("doc_id"), col("lang"))
       a.unionByName(b, allowMissingColumns = true).orderBy("doc_id")
@@ -615,7 +613,7 @@ object Queries2 {
     // -- OSM-style way assembly: node/way tables -> geometries
     //    (osmtools Transform.groovy toPolygons/toLines) ---------------------
     "osm_way_assembly" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
+      val d = Tables.read(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") % 40 * 5).cast("double").as("x0"),
         (floor(col("doc_id") / 40) * 5).cast("double").as("y0"),
         (col("doc_id") % 4 + 2).cast("double").as("w"),
@@ -644,14 +642,14 @@ object Queries2 {
       val zones = Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_rsu"), col("the_geom"))
       val b = rectLayer(s, dir).select("the_geom")
-      val veg = t(s, dir, "documents").where(col("doc_id") < 400).select(
+      val veg = Tables.read(s, dir, "documents").where(col("doc_id") < 400).select(
         (col("doc_id") % 20 * 7).cast("double").as("vx"),
         (floor(col("doc_id") / 20) % 20 * 7).cast("double").as("vy"),
         (col("doc_id") % 5 + 2).cast("double").as("vw"),
         (col("doc_id") * 3 % 5 + 2).cast("double").as("vh"))
         .select(G.stMakeBox(col("vx"), col("vy"), col("vx") + col("vw"), col("vy") + col("vh"))
           .as("the_geom"))
-      val water = t(s, dir, "documents").where(col("doc_id") < 169).select(
+      val water = Tables.read(s, dir, "documents").where(col("doc_id") < 169).select(
         (col("doc_id") % 13 * 11).cast("double").as("wx"),
         (floor(col("doc_id") / 13) % 13 * 11).cast("double").as("wy"),
         (col("doc_id") % 7 + 2).cast("double").as("ww"),
@@ -748,7 +746,7 @@ object Queries2 {
     // -- embedding-cosine near-dup pairs (exact; broadcast self-join,
     //    IVF-bucketed at scale — see Similarity.cosinePairs) ----------------
     "dedup_embedding_cosine" -> ((s, dir) => {
-      Similarity.cosinePairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
+      Similarity.cosinePairs(Tables.read(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 9).as("cosine"))
         .orderBy("id_a", "id_b")
     }),
@@ -786,7 +784,7 @@ object Queries2 {
     // a pure function of the word hash; the md5-based hash (Dedup.md5WordHash)
     // is bit-replicable in DuckDB — full oracle, not rows-only.
     "dedup_simhash" -> ((s, dir) => {
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 3,
+      Dedup.simhashPairs(Tables.read(s, dir, "documents"), "doc_id", "text", maxHamming = 3,
           wordHash = Dedup.Md5WordHasher, maxBucket = Some(4096))
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -796,7 +794,7 @@ object Queries2 {
     // first-k vectors, map-side argmax assignment, nProbe buckets probed.
     // Deterministic end-to-end -> replicated exactly in the DuckDB oracle.
     "ann_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = Tables.read(s, dir, "embeddings")
       val queries = emb.where(col("vec_id").isin(1L, 7L, 42L, 99L, 123L))
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       // one Lloyd refinement pass over the first-k seed (the scale path's
@@ -825,7 +823,7 @@ object Queries2 {
     // Order-sensitive rolling document fingerprint (md5-based word hash —
     // same 31-bit field fold replicated in DuckDB via list_reduce).
     "text_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.fingerprint(col("text"), Dedup.md5WordHash).as("fingerprint"))
         .orderBy("doc_id")

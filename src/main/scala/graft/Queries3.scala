@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.indicators.Lcz
+import graft.sources.Tables
 
 /**
  * Third query batch: LCZ classification over SYNTHETIC indicator rows with a
@@ -15,9 +16,6 @@ import graft.indicators.Lcz
  * IEEE expression tree.
  */
 object Queries3 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Exact round-trip double literal. */
   private def L(x: Double): String = {
@@ -47,7 +45,7 @@ object Queries3 {
     "area_fraction_light_industry_lcz" -> "CAST(d * 43 % 40 AS DOUBLE) / 100")
 
   private def lczSynthDf(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_rsu"),
       ((col("doc_id") % 90).cast("double") / 100 + 0.05).as("sky_view_factor"),
       ((col("doc_id") * 3 % 200).cast("double") / 100).as("aspect_ratio"),
@@ -178,7 +176,7 @@ object Queries3 {
   private val RoadSurfaces = Array("asphalt", "concrete", "paved", "gravel", "sett")
 
   private def roadsSynth(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_road"),
       element_at(lit(RoadOsmTypes), (col("doc_id") % 10 + 1).cast("int")).as("type"),
       when(col("doc_id") % 3 === 0, -1)
@@ -203,7 +201,7 @@ object Queries3 {
       val zones = graft.operators.Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_rsu"), col("the_geom"))
       def layer(cellW: Int, nCells: Int, limit: Int, wMod: Int, hMod: Int, typ: String) =
-        t(s, dir, "documents").where(col("doc_id") < limit).select(
+        Tables.read(s, dir, "documents").where(col("doc_id") < limit).select(
           (col("doc_id") % nCells * cellW).cast("double").as("lx"),
           (floor(col("doc_id") / nCells) % nCells * cellW).cast("double").as("ly"),
           (col("doc_id") % wMod + 2).cast("double").as("lw"),

@@ -7,7 +7,7 @@ import graft.index.CellGrid
 import graft.ml.RandomForest
 import graft.indicators.{GridIndicators, Svf}
 import graft.operators.{SpatialUnits, Tiling}
-import graft.sources.OsmFormatting
+import graft.sources.{OsmFormatting, Tables}
 
 /**
  * Fourth query batch (round 2): the TSU preparation front-half, UTRF
@@ -119,7 +119,7 @@ object Queries4 {
     leafValue = r => math.rint((3.0 + r.nextDouble() * 27.0) * 10000) / 10000, seed = 202L)
 
   private def rfInput(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id").as("id_build") +: rfFeatures.map(f => f._4.as(f._1)): _*)
 
   private val rfFeatSqlMap: Map[String, String] = rfFeatures.map(f => f._1 -> f._1).toMap
@@ -174,7 +174,7 @@ object Queries4 {
       G.stMakeBox(col("id") * 120.0, lit(0.0), col("id") * 120.0 + 100, lit(100.0)).as("the_geom"))
   private def svfBuildings(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    s.read.parquet(s"$dir/documents.parquet").where(d < 48).select(
+    Tables.read(s, dir, "documents").where(d < 48).select(
       d.as("id_build"),
       G.stMakeBox(
         (d % 4) * 120 + lit(10.0) + floor(d / 4) % 4 * 22,
@@ -224,12 +224,12 @@ object Queries4 {
     //    WorkflowOSM.groovy:719-775): 20 synthetic bboxes (10 northern, 10
     //    southern, all UTM zone 31) -> extended envelope (spherical-arc
     //    expansion), SRID pick, and corner-reprojected zone / extended-bbox
-    //    quads read back from the RESULT tables. Envelope degrees round 6
+    //    quads read from the resolved zone's WKB. Envelope degrees round 6
     //    (libm cos in the longitude delta), UTM meters round 3. ----------
     "zone_extract" -> ((s, dir) => {
       import s.implicits._
       import graft.workflow.ZoneExtract
-      val ks = s.read.parquet(s"$dir/documents.parquet")
+      val ks = Tables.read(s, dir, "documents")
         .where(col("doc_id") < 20).select(col("doc_id").cast("int"))
         .collect().map(_.getInt(0)).sorted.toSeq
       val rows = ks.map { k =>
@@ -238,13 +238,12 @@ object Queries4 {
           else (-34.0 - (k - 10) * 0.29, 1.1 + (k - 10) * 0.33)
         val z = ZoneExtract.extractOSMZone(s,
           (south, west, south + 0.06, west + 0.07), 150.0 + k * 25)
-        def corners(df: DataFrame) = {
-          val q = graft.geom.Geo.fromWkb(df.head().getAs[Array[Byte]]("the_geom"))
-          val cs = q.getCoordinates // ring order: SW, SE, NE, NW, SW
+        def corners(wkb: Array[Byte]) = {
+          val cs = graft.geom.Geo.fromWkb(wkb).getCoordinates // ring order: SW, SE, NE, NW, SW
           (cs(0).x, cs(0).y, cs(2).x, cs(2).y)
         }
-        val (zswE, zswN, zneE, zneN) = corners(z.utmZoneTable)
-        val (bswE, bswN, bneE, bneN) = corners(z.utmExtendedBboxTable)
+        val (zswE, zswN, zneE, zneN) = corners(z.utmZoneWkb)
+        val (bswE, bswN, bneE, bneN) = corners(z.utmExtendedBboxWkb)
         val e = z.osmEnvelopeExtended
         (k, z.utmSrid, e.minLon, e.minLat, e.maxLon, e.maxLat,
           zswE, zswN, zneE, zneN, bswE, bswN, bneE, bneN)
@@ -266,7 +265,7 @@ object Queries4 {
     //    the series with exp/ln hyperbolics; libm 1-ulp differences are
     //    ~1e-9 m -> round 3 (mm). -----------------------------------------
     "geo_utm_transform" -> ((s, dir) => {
-      val src = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"),
+      val src = Tables.read(s, dir, "documents").select(col("doc_id"),
         (lit(2.5) + (col("doc_id") % 200).cast("double") / 100).as("lon"),
         (lit(43.0) + (col("doc_id") * 7 % 600).cast("double") / 100).as("lat"))
       src.select(col("doc_id"),
@@ -285,7 +284,7 @@ object Queries4 {
     "osm_format_heights" -> ((s, dir) => {
       val d = col("doc_id")
       val v = (d % 20 + 1).cast("string")
-      val raw = s.read.parquet(s"$dir/documents.parquet").select(
+      val raw = Tables.read(s, dir, "documents").select(
         d.as("id_build"),
         when(d % 8 === 0, lit(null).cast("string"))
           .when(d % 8 === 1, v)
@@ -346,7 +345,7 @@ object Queries4 {
     //    and how many are warm LCZ. ---------------------------------------
     "grid_warm_windows" -> ((s, dir) => {
       val d = col("doc_id")
-      val cells = s.read.parquet(s"$dir/documents.parquet").select(
+      val cells = Tables.read(s, dir, "documents").select(
         d.as("id_grid"), (d % 25 + 1).as("id_row"),
         (floor(d / 25).cast("long") + 1).as("id_col"),
         element_at(lit(Array(1, 2, 6, 8, 101, 104, 107)), (d % 7).cast("int") + 1).as("lcz"))
@@ -360,7 +359,7 @@ object Queries4 {
     //    three stages from their already-verified SQL building blocks. ----
     "text_curation" -> ((s, dir) => {
       operators.Curation.curate(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+          Tables.read(s, dir, "documents"), "doc_id", "text",
           lang = "en", minQuality = 0.6)
         .select(col("doc_id"), col("lang_id"),
           round(col("quality"), 6).as("quality"), col("n_tokens"))
@@ -376,7 +375,7 @@ object Queries4 {
       val d = col("doc_id")
       val zones = Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_zone"), col("the_geom"))
-      val masks = s.read.parquet(s"$dir/documents.parquet").where(d < 40).select(
+      val masks = Tables.read(s, dir, "documents").where(d < 40).select(
         G.stMakeBox((d * 11 % 120).cast("double"), (d * 23 % 120).cast("double"),
           (d * 11 % 120).cast("double") + (d % 30) + 10,
           (d * 23 % 120).cast("double") + (d * 3 % 30) + 10).as("the_geom"),
@@ -396,7 +395,7 @@ object Queries4 {
     //    parameters so the transform stays deterministic. ------------------
     "zone_stats" -> ((s, dir) => {
       val d = col("doc_id")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val zone = s.range(1).select(lit(1).as("id_zone"),
         G.stMakeBox(lit(0.0), lit(0.0), lit(100.0), lit(100.0)).as("the_geom"))
       val bld = docs.select(d.as("id_build"),
@@ -414,7 +413,7 @@ object Queries4 {
     // -- grid population disaggregation (GridIndicators.groovy:45-109) ----
     "grid_population" -> ((s, dir) => {
       val cells = Tiling.makeGrid(s, 0, 0, 100, 100, 10, 10)
-      val pop = s.read.parquet(s"$dir/documents.parquet").where(col("doc_id") < 50)
+      val pop = Tables.read(s, dir, "documents").where(col("doc_id") < 50)
         .select(col("doc_id").as("id_pop"),
           G.stMakeBox((col("doc_id") * 13 % 90).cast("double"),
             (col("doc_id") * 29 % 90).cast("double"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.{GeoFunctions => G}
 import graft.operators.Tiling
-import graft.sources.{OsmAssembly, OsmLayers, OsmTagMaps}
+import graft.sources.{OsmAssembly, OsmLayers, OsmTagMaps, Tables}
 
 /**
  * Fifth query batch (round 3): OSM layer formatting (building + road type
@@ -102,7 +102,7 @@ object Queries5 {
   private def rawBuildings(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
     val v = (d % 20 + 1).cast("string")
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Tables.read(s, dir, "documents").select(
       d.as("id"),
       element_at(lit(BldTags.toArray), (d % 12).cast("int") + 1).as("building"),
       when(d % 7 === 0, "school").otherwise(lit(null).cast("string")).as("amenity"),
@@ -136,7 +136,7 @@ object Queries5 {
 
   private def rawRoads(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Tables.read(s, dir, "documents").select(
       d.as("id"),
       element_at(lit(RoadTags.toArray), (d % 8).cast("int") + 1).as("highway"),
       when(d % 6 === 0, concat((d % 9 + 2).cast("string"), lit(".5")))
@@ -172,7 +172,7 @@ object Queries5 {
     "layer", "bridge", "gauge", "usage")
   private def rawRails(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Tables.read(s, dir, "documents").select(
       d.as("id"),
       element_at(lit(Array("rail", "subway", "tram", "disused", "abandoned")),
         (d % 5).cast("int") + 1).as("railway"),
@@ -195,7 +195,7 @@ object Queries5 {
     "sport", "surface", "vineyard", "layer")
   private def rawVeget(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Tables.read(s, dir, "documents").select(
       d.as("id"),
       element_at(lit(Array[String](null, "wood", "scrub", "grassland", "wetland")),
         (d % 5).cast("int") + 1).as("natural"),
@@ -218,7 +218,7 @@ object Queries5 {
 
   private def rawWater(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Tables.read(s, dir, "documents").select(
       d.as("id"),
       element_at(lit(Array[String](null, "water", "bay", "strait")),
         (d % 4).cast("int") + 1).as("natural"),
@@ -237,7 +237,7 @@ object Queries5 {
   // ways (second reversed), r%3 holes of 2x2 at integer coords; relations
   // with r%7==0 are tagged 'route' (not multipolygon) and must drop.
   private def relScene(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val base = s.read.parquet(s"$dir/documents.parquet").select(
+    val base = Tables.read(s, dir, "documents").select(
       col("doc_id").cast("int").as("r"),
       (col("doc_id") % 50 * 100).cast("double").as("ox"),
       (floor(col("doc_id") / 50) * 100).cast("double").as("oy"),
@@ -413,7 +413,7 @@ object Queries5 {
         when(d % 7 =!= 0, lit("""<tag k="type" v="multipolygon"/>"""))
           .otherwise(lit("""<tag k="type" v="route"/>""")),
         lit("</relation>"))
-      val xml = s.read.parquet(s"$dir/documents.parquet").select(concat(
+      val xml = Tables.read(s, dir, "documents").select(concat(
         lit("<osm>"), nd(0, 0, 0), nd(1, 20, 0), nd(2, 20, 20), nd(3, 0, 20),
         holeNd(0), holeNd(1),
         way(0, Seq(0, 1, 2)), way(1, Seq(2, 3, 0)), holeWay(0), holeWay(1),
@@ -434,7 +434,7 @@ object Queries5 {
     "rf_train_apply" -> ((s, dir) => {
       val (cls, reg) = trainedForests(s)
       val d = col("doc_id")
-      val eval = s.read.parquet(s"$dir/documents.parquet").select(d.as("doc_id"),
+      val eval = Tables.read(s, dir, "documents").select(d.as("doc_id"),
         (d % 16 + 1).cast("double").as("x1"),
         (d % 8 + 1).cast("double").as("x2"),
         (d % 5 + 1).cast("double").as("x3"))
@@ -465,7 +465,7 @@ object Queries5 {
       val cls = roundTrip(cls0)
       val reg = roundTrip(reg0)
       val d = col("doc_id")
-      val eval = s.read.parquet(s"$dir/documents.parquet").select(d.as("doc_id"),
+      val eval = Tables.read(s, dir, "documents").select(d.as("doc_id"),
         (d % 16 + 1).cast("double").as("x1"),
         (d % 8 + 1).cast("double").as("x2"),
         (d % 5 + 1).cast("double").as("x3"))
@@ -486,7 +486,7 @@ object Queries5 {
     //    on integer coords are exact) -----------------------------------
     "shp_roundtrip" -> ((s, dir) => {
       val d = col("doc_id")
-      val docs = s.read.parquet(s"$dir/documents.parquet").where(d < 40)
+      val docs = Tables.read(s, dir, "documents").where(d < 40)
         .select(d.cast("int").as("doc_id")).localCheckpoint()
       val pts = docs.select(
         G.stPoint(d.cast("double") * 3 + 0.5, d.cast("double") * 1.5).as("the_geom"),
@@ -539,7 +539,7 @@ object Queries5 {
     "sink_asc" -> ((s, dir) => {
       import s.implicits._
       val d = col("doc_id")
-      val cells = s.read.parquet(s"$dir/documents.parquet").where(d < 20).select(
+      val cells = Tables.read(s, dir, "documents").where(d < 20).select(
         (d % 5 + 1).cast("int").as("id_col"),
         (floor(d / 5) + 1).cast("int").as("id_row"),
         ((d * 7 % 32).cast("double") / 8).as("v"))
@@ -558,7 +558,7 @@ object Queries5 {
     "sink_geojson" -> ((s, dir) => {
       import s.implicits._
       val d = col("doc_id")
-      val rows = s.read.parquet(s"$dir/documents.parquet").where(d < 25).select(
+      val rows = Tables.read(s, dir, "documents").where(d < 25).select(
         d.cast("int").as("id"),
         concat(lit("q\""), d.cast("string")).as("name"),
         G.stPoint((d % 10).cast("double") * 2.5, d.cast("double") * 1.5).as("the_geom"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.geom.{GeoFunctions => G}
 import graft.operators.Tiling
 import graft.workflow.{WorkflowConfig, WorkflowRunner}
+import graft.sources.Tables
 
 /**
  * Sixth query batch (round 4): the FULL `rasterizeIndicators` grid-indicator
@@ -25,9 +26,6 @@ object Queries6 {
 
   private val grid = graft.index.CellGrid.fixture
   private val Res = 10
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** The 9-cell analysis grid (makeGrid ids are 0-based row-major; cell
     * (col,row) 1-based spans [(col-1)·50,(col)·50)×[(row-1)·50,(row)·50)). */
@@ -62,7 +60,7 @@ object Queries6 {
     * (16 per cell at every driver SF). */
   private[graft] def slotBuildings(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    t(s, dir, "documents").where(d < 144).select(
+    Tables.read(s, dir, "documents").where(d < 144).select(
       d.as("id_build"),
       ((d % 9 % 3) * 50 + (floor(d / 9) % 4) * 12 + 1).cast("double").as("x0"),
       (floor((d % 9) / 3) * 50 + (floor(d / 36) % 4) * 12 + 1).cast("double").as("y0"),
@@ -92,7 +90,7 @@ object Queries6 {
   /** Scatter rectangles crossing cell borders (the rsu_overlay_fractions
     * vegetation/water scenes, Queries2). */
   private[graft] def vegRects(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").where(col("doc_id") < 400).select(
+    Tables.read(s, dir, "documents").where(col("doc_id") < 400).select(
       col("doc_id").as("id_veget"),
       (col("doc_id") % 20 * 7).cast("double").as("vx"),
       (floor(col("doc_id") / 20) % 20 * 7).cast("double").as("vy"),
@@ -110,7 +108,7 @@ object Queries6 {
       |  FROM documents WHERE doc_id < 400)""".stripMargin
 
   private[graft] def waterRects(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").where(col("doc_id") < 169).select(
+    Tables.read(s, dir, "documents").where(col("doc_id") < 169).select(
       col("doc_id").as("id_water"),
       (col("doc_id") % 13 * 11).cast("double").as("wx"),
       (floor(col("doc_id") / 13) % 13 * 11).cast("double").as("wy"),
@@ -134,7 +132,7 @@ object Queries6 {
   // ---- LCZ polygons: scatter rects with classes {1, 6, 101, 107} ----------
 
   private def lczRects(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").where(col("doc_id") < 500).select(
+    Tables.read(s, dir, "documents").where(col("doc_id") < 500).select(
       (col("doc_id") % 15 * 10).cast("double").as("lx"),
       (floor(col("doc_id") / 15) % 15 * 10).cast("double").as("ly"),
       (col("doc_id") % 9 + 3).cast("double").as("lw"),
@@ -219,7 +217,7 @@ object Queries6 {
   // nodes. Node ids = doc*8+pos (unique per way corner).
   private def osmScene(s: SparkSession, dir: String): OsmXmlTables = {
     val d = col("doc_id")
-    val base = t(s, dir, "documents").select(d.as("doc_id"),
+    val base = Tables.read(s, dir, "documents").select(d.as("doc_id"),
       (d % 40 * 5).cast("double").as("x0"),
       (floor(d / 40) * 5).cast("double").as("y0"),
       (d % 4 + 2).cast("double").as("w"),
@@ -448,7 +446,7 @@ object Queries6 {
     //    reader (WorldPopExtract.groovy:80-115) — nodata cells skipped,
     //    PK numbering in read order ---------------------------------------
     "worldpop_grid" -> ((s, dir) => {
-      val vals = t(s, dir, "documents").where(col("doc_id") < 150).select(
+      val vals = Tables.read(s, dir, "documents").where(col("doc_id") < 150).select(
         (col("doc_id") % 20 + 1).cast("int").as("id_col"),
         (floor(col("doc_id") / 20) + 1).cast("int").as("id_row"),
         (col("doc_id").cast("double") / 4.0).as("pop"))
@@ -480,7 +478,7 @@ object Queries6 {
           .when(col("id") % 48 + 9 <= 25, 9.0).otherwise(12.0).as("yr"))
       val forest = graft.ml.RandomForestTrainer.train(train,
         Seq("area", "rsu_area"), "yr", numTrees = 1, maxDepth = 3, numClasses = 0)
-      val estimate = t(s, dir, "documents").where(col("doc_id") < 144)
+      val estimate = Tables.read(s, dir, "documents").where(col("doc_id") < 144)
         .where(col("doc_id") % 3 === 0).select(col("doc_id").as("id_build"))
       val p = WorkflowConfig.Defaults.copy(indicatorUse = Seq("UTRF"),
         surfaceVegetation = 1e6, surfaceHydro = 1e6, svfSimplified = true)
@@ -763,7 +761,7 @@ object Queries6 {
     //    typo_maj layers, :1845-1860) — includes the NULL-when-empty cells
     //    semantics (utrf polys confined to x<100 leaves column-3 cells null)
     "grid_utrf_fraction" -> ((s, dir) => {
-      val utrfArea = t(s, dir, "documents").where(col("doc_id") < 200).select(
+      val utrfArea = Tables.read(s, dir, "documents").where(col("doc_id") < 200).select(
         (col("doc_id") % 10 * 10).cast("double").as("ux"),
         (floor(col("doc_id") / 10) % 15 * 10).cast("double").as("uy"),
         (col("doc_id") % 7 + 2).cast("double").as("uw"),

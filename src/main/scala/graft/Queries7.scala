@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.{GeoFunctions => G}
-import graft.sources.{BdTopo, Shapefile}
+import graft.sources.{BdTopo, Shapefile, Tables}
 import graft.workflow.{WorkflowConfig, WorkflowRunner}
 
 /**
@@ -21,9 +21,6 @@ object Queries7 {
 
   private val grid = graft.index.CellGrid.fixture
   private val Res = 10
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   private def md5Of(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5").digest(bytes)
@@ -136,11 +133,11 @@ object Queries7 {
     "sink_layers" -> ((s, dir) => {
       import s.implicits._
       val d = col("doc_id")
-      val cellsLayer = t(s, dir, "documents").where(d < 30).select(
+      val cellsLayer = Tables.read(s, dir, "documents").where(d < 30).select(
         d.cast("int").as("id"), concat(lit("c"), d).as("name"),
         G.stPoint((d % 6).cast("double") * 2.5, d.cast("double") * 0.5).as("the_geom"))
         .orderBy("id")
-      val statsLayer = t(s, dir, "documents").where(d < 40).select(
+      val statsLayer = Tables.read(s, dir, "documents").where(d < 40).select(
         d.cast("int").as("id"), (d * 3 % 17).cast("int").as("v"),
         concat(lit("s"), d % 7).as("tag"))
         .coalesce(1).sortWithinPartitions("id") // ONE deterministic csv part
@@ -190,7 +187,7 @@ object Queries7 {
     //    measure = area (polygons) / length (lines), round 9. --------------
     "bdtopo_format_e2e" -> ((s, dir) => memoized("bdtopo_format_e2e", s, dir) {
       val d = col("doc_id")
-      val docs = t(s, dir, "documents").select(d).localCheckpoint()
+      val docs = Tables.read(s, dir, "documents").select(d).localCheckpoint()
       def boxAt(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
                 w: org.apache.spark.sql.Column, h: org.apache.spark.sql.Column) =
         G.stMakeBox(x.cast("double"), y.cast("double"),
@@ -371,7 +368,7 @@ object Queries7 {
     //      water: aux1=regime n4=zindex | urban: n3=id_urban ---------------
     "bdtopo_v3_e2e" -> ((s, dir) => memoized("bdtopo_v3_e2e", s, dir) {
       val d = col("doc_id")
-      val docs = t(s, dir, "documents").select(d).localCheckpoint()
+      val docs = Tables.read(s, dir, "documents").select(d).localCheckpoint()
       def boxAt(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
                 w: org.apache.spark.sql.Column, h: org.apache.spark.sql.Column) =
         G.stMakeBox(x.cast("double"), y.cast("double"),
@@ -605,7 +602,7 @@ object Queries7 {
     //    the graph from the exact pair set and close it with a recursive
     //    CTE (the blocks_cc pattern). ------------------------------------
     "dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val pairs = Queries2.lshPairs(s, dir) // shared with dedup_minhash_lsh
       operators.Dedup.clusters(docs, "doc_id", pairs)
         .select(col("doc_id"), col("cluster"), col("keep"), col("cluster_size"))
@@ -617,7 +614,7 @@ object Queries7 {
     //    character coverage, duplicated-trigram character fraction. All
     //    integer counts divided once — bit-identical across engines. ------
     "text_repetition" -> ((s, dir) => {
-      operators.TextAnalysis.repetition(t(s, dir, "documents"), "doc_id", "text")
+      operators.TextAnalysis.repetition(Tables.read(s, dir, "documents"), "doc_id", "text")
         .select(col("doc_id"), col("n_words"),
           round(col("dup_word_frac"), 9).as("dup_word_frac"),
           col("top_bigram"),
@@ -634,7 +631,7 @@ object Queries7 {
     //    canonical analytically (generating-arithmetic replica), so the
     //    engine's real regex/array parse is what the gate checks. ---------
     "url_canonical_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
+      val d = Tables.read(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") % 100).as("k"), floor(col("doc_id") / lit(100)).as("v"))
       val ks = col("k").cast("string")
       val k5 = (col("k") % 5).cast("string"); val k7 = (col("k") % 7).cast("string")
@@ -662,7 +659,7 @@ object Queries7 {
     //    published 13). Benchmark grams broadcast; train grams are
     //    filtered map-side by a broadcast semi join. --------------------
     "text_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val bucket = pmod(operators.Dedup.md5WordHash(col("doc_id").cast("string")), lit(1000L))
       val bench = docs.where(bucket < 20)
       val train = docs.where(bucket >= 20)
@@ -676,7 +673,7 @@ object Queries7 {
     //    the language's per-mille quota; pure filter, no shuffle, the same
     //    rows survive in DuckDB (md5 arithmetic replicated exactly). ------
     "sample_by_hash" -> ((s, dir) => {
-      operators.Curation.sampleByHash(t(s, dir, "documents"),
+      operators.Curation.sampleByHash(Tables.read(s, dir, "documents"),
           col("doc_id"), col("lang"),
           Map("en" -> 900, "de" -> 500, "fr" -> 250), defaultPerMille = 100)
         .select(col("doc_id"), col("lang"), col("sample_bucket"))
@@ -691,7 +688,7 @@ object Queries7 {
     //    natural chunk repeat resolves identically; order-preserving
     //    reassembly is what the gate checks. --------------------------------
     "text_line_dedup" -> ((s, dir) => {
-      val staged = t(s, dir, "documents")
+      val staged = Tables.read(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ", -1).as("w"))
       val nChunks = ceil(size(col("w")) / lit(6.0)).cast("int")
       val chunks = transform(sequence(lit(0), nChunks - lit(1)),
@@ -715,7 +712,7 @@ object Queries7 {
     //    real regex pass is what the gate checks. ---------------------------
     "pii_redact" -> ((s, dir) => {
       val k = col("doc_id")
-      val staged = t(s, dir, "documents").select(k,
+      val staged = Tables.read(s, dir, "documents").select(k,
         array_join(slice(split(col("text"), " ", -1), 1, 8), " ").as("rest"))
       val email = concat(lit("user"), k.cast("string"),
         lit("@mail"), (k % 7).cast("string"), lit(".com"))
@@ -747,7 +744,7 @@ object Queries7 {
         transform(chunks, l => concat(lit("- "), l))).otherwise(chunks)
       val dotted = when(col("doc_id") % 7 === 0,
         transform(bulleted, l => concat(l, lit("...")))).otherwise(bulleted)
-      val staged = t(s, dir, "documents")
+      val staged = Tables.read(s, dir, "documents")
         .select(col("doc_id"), array_join(dotted, "\n").as("text2"))
       operators.Curation.gopherQuality(staged, "doc_id", "text2",
           minWords = 20, maxWords = 80, minMeanWordLen = 3.5, maxMeanWordLen = 4.75,
@@ -765,7 +762,7 @@ object Queries7 {
     "dedup_spans" -> ((s, dir) => {
       val slogan = "subscribe to our newsletter for updates delivered fresh daily now"
       val slogan2 = "all content on this site is licensed for personal use"
-      val staged = t(s, dir, "documents").select(col("doc_id"),
+      val staged = Tables.read(s, dir, "documents").select(col("doc_id"),
         when(col("doc_id") % 12 === 0,
             concat(lit(slogan2 + " "), col("text"), lit(" " + slogan)))
           .when(col("doc_id") % 4 === 0, concat(col("text"), lit(" " + slogan)))
@@ -784,7 +781,7 @@ object Queries7 {
     "curation_pipeline_e2e" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-curation-lake")
       try {
-        lake.CurationPipeline.run(s, root.toString, t(s, dir, "documents"))
+        lake.CurationPipeline.run(s, root.toString, Tables.read(s, dir, "documents"))
           .select(col("doc_id"), col("shard"), col("n_tokens"),
             col("token_start"), col("bin_first"), col("bin_last"),
             col("offset_in_bin"), round(col("quality"), 6).as("quality"),
@@ -798,7 +795,7 @@ object Queries7 {
     //    packing): top-50 words by (freq DESC, word ASC) — a deterministic
     //    cut — then every doc encoded as space-joined ids with UNK = 50. ----
     "vocab_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val vocab = operators.Vocab.build(docs, "text", size = 50)
       operators.Vocab.encode(docs, "doc_id", "text", vocab)
         .select(col("doc_id"), col("n_tokens"), col("n_unk"), col("encoded"))
@@ -811,7 +808,7 @@ object Queries7 {
     //    deterministic -> replicated exactly in DuckDB (same IEEE order;
     //    identical doubles, so rank ties can't diverge). ---------------------
     "ann_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = Tables.read(s, dir, "embeddings")
       val queries = emb.where(col("vec_id").isin(1L, 7L, 42L, 99L, 123L))
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val cb = operators.Similarity.pqCodebooks(emb, "vec_id", "embedding",
@@ -828,7 +825,7 @@ object Queries7 {
     //    high-perplexity tail); one COALESCE formula covers seen / unseen-
     //    bigram / unseen-unigram; ln+exp are the libm boundary -> round 6. --
     "lm_perplexity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val lm = operators.LangModel.trainBigram(
         docs.where(col("lang") === "en"), "text")
       operators.LangModel.perplexity(docs, "doc_id", "text", lm, k = 0.5)
@@ -843,7 +840,7 @@ object Queries7 {
     //    (ordered by doc_id, score rounded 6 — no rank instability rides
     //    the compare; ln is the only libm op). ------------------------------
     "bm25_rank" -> ((s, dir) => {
-      operators.Bm25.score(t(s, dir, "documents"), "doc_id", "text",
+      operators.Bm25.score(Tables.read(s, dir, "documents"), "doc_id", "text",
           Seq("table", "spark", "join"))
         .select(col("doc_id"), col("n_terms_hit"), col("doc_len"),
           round(col("score"), 6).as("score"))
@@ -854,7 +851,7 @@ object Queries7 {
     //    the exclusive within-shard cumsum (keyed window), bins by integer
     //    div — a doc straddling a bin boundary gets bin_first < bin_last. --
     "seq_pack" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+      val docs = Tables.read(s, dir, "documents").select(col("doc_id"), col("lang"),
         operators.TextAnalysis.tokenCount(col("text")).as("n_toks"))
       operators.Curation.packSequences(docs, "doc_id", col("n_toks"),
           col("lang"), capacity = 512)

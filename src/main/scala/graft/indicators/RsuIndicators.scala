@@ -213,10 +213,13 @@ object RsuIndicators {
     } :+ sum(col("__a")).as("__tot")
     val g = cand.groupBy("id_rsu").agg(aggs.head, aggs.tail: _*)
     val out = rsu.select("id_rsu").join(g, Seq("id_rsu"), "left")
+    // an RSU whose buildings clip to zero total area (they touch it only
+    // along an edge) reads 0.0 like one without buildings (null total);
+    // the guard keeps the ANSI division from throwing DIVIDE_BY_ZERO
     layerBounds.zipWithIndex.foldLeft(out) { case (df, ((lo, hi), i)) =>
       df.withColumn(
         s"roof_fraction_distribution_h${fmt(lo)}_${fmt(hi)}",
-        coalesce(col(s"__l_$i") / col("__tot"), lit(0.0)))
+        when(col("__tot") =!= 0.0, col(s"__l_$i") / col("__tot")).otherwise(0.0))
         .drop(s"__l_$i")
     }.drop("__tot")
   }

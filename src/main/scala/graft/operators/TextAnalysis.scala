@@ -80,7 +80,11 @@ object TextAnalysis {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** One-pass (lang_id, quality, n_tokens) of a document — the fused form of
-    * `langId(t)`, `qualityScore(t)`, `tokenCount(t)`. */
+    * `langId(t)`, `qualityScore(t)`, `tokenCount(t)`. Nondeterministic is an
+    * optimization fence (as in OsmFormatting), not a semantic statement: the
+    * kernel is pure, but left pushable, a filter on its struct fields gets
+    * substituted through the projection and re-evaluates the kernel once per
+    * referenced field. */
   private[operators] val langQualityTokensUdf = udf { (text: String) =>
     if (text == null) null
     else {
@@ -113,7 +117,7 @@ object TextAnalysis {
       val quality = round6(0.4 * lenScore + 0.3 * wordLenScore + 0.3 * alpha)
       (langId, quality, nTok)
     }
-  }
+  }.asNondeterministic().withName("lang_quality_tokens")
 
   /** Rolling polynomial fingerprint over word hashes:
     * fp = Σ h(w_i)·B^(n-1-i) mod P (Rabin-Karp shape, order-sensitive —

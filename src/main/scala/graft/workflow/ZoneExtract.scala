@@ -29,9 +29,11 @@ import graft.geom.{Geo, Projection}
  *     (reference default 1000 km², WorkflowOSM.groovy:67).
  *
  * All of this is driver-side scalar math over 4 corners — zone resolution
- * is O(#zones), never data-scale; the returned one-row tables feed
- * [[WorkflowRunner.run]] like the reference's utm_zone_table /
- * utm_extended_bbox_table.
+ * is O(#zones), never data-scale. The two UTM quads are returned as WKB;
+ * their one-row tables, which feed [[WorkflowRunner.run]] like the
+ * reference's utm_zone_table / utm_extended_bbox_table, are built on first
+ * access (planning a one-row DataFrame costs milliseconds of Spark planning,
+ * wasted on callers that only read the quads).
  */
 object ZoneExtract {
 
@@ -44,9 +46,20 @@ object ZoneExtract {
     def centreLat: Double = (minLat + maxLat) / 2
   }
 
-  final case class Zone(utmZoneTable: DataFrame, utmExtendedBboxTable: DataFrame,
-                        osmEnvelopeExtended: Env, osmGeometry: Array[Byte],
-                        utmSrid: Int)
+  /** A resolved zone: the UTM zone / extended-bbox quads (WKB), the
+    * lat/lon extended envelope, the lat/lon zone polygon and the SRID. */
+  final case class Zone(utmZoneWkb: Array[Byte], utmExtendedBboxWkb: Array[Byte],
+                        idZone: String, osmEnvelopeExtended: Env,
+                        osmGeometry: Array[Byte], utmSrid: Int)(spark: SparkSession) {
+    /** One-row (the_geom WKB, id_zone, srid) tables of the two quads. */
+    lazy val utmZoneTable: DataFrame = table(utmZoneWkb)
+    lazy val utmExtendedBboxTable: DataFrame = table(utmExtendedBboxWkb)
+
+    private def table(wkb: Array[Byte]): DataFrame = {
+      import spark.implicits._
+      Seq((wkb, idZone, utmSrid)).toDF("the_geom", "id_zone", "srid")
+    }
+  }
 
   /** Spherical-arc envelope expansion (step 2 above); the centre latitude
     * of the UNEXPANDED envelope scales the longitude delta. */
@@ -78,8 +91,8 @@ object ZoneExtract {
    * (south, west, north, east); `idZone` defaults to the reference's
    * `formatLocation` rendering (values joined with '_').
    *
-   * @return the one-row UTM zone / extended-bbox tables
-   *         (the_geom WKB, id_zone, srid) + the lat/lon extended envelope
+   * @return the UTM zone / extended-bbox quads (and their one-row
+   *         tables) + the lat/lon extended envelope
    */
   def extractOSMZone(spark: SparkSession, bbox: (Double, Double, Double, Double),
                      distance: Double, bboxSizeKm2: Double = 1000.0,
@@ -96,11 +109,8 @@ object ZoneExtract {
       throw new IllegalArgumentException(
         s"The size of the OSM BBOX ($sizeKm2) is greater than the limit : $bboxSizeKm2 in km2")
     val id = idZone.getOrElse(Seq(south, west, north, east).mkString("_"))
-    import spark.implicits._
-    val zoneDf = Seq((zoneUtm, id, srid)).toDF("the_geom", "id_zone", "srid")
-    val extDf = Seq((utmQuad(extended, srid), id, srid)).toDF("the_geom", "id_zone", "srid")
-    Zone(zoneDf, extDf, extended, Geo.toWkb(
-      Geo.box(zoneEnv.minLon, zoneEnv.minLat, zoneEnv.maxLon, zoneEnv.maxLat)), srid)
+    Zone(zoneUtm, utmQuad(extended, srid), id, extended, Geo.toWkb(
+      Geo.box(zoneEnv.minLon, zoneEnv.minLat, zoneEnv.maxLon, zoneEnv.maxLat)), srid)(spark)
   }
 
   /** The `input.locations` / `input.area` block of the workflow config

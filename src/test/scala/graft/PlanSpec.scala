@@ -58,6 +58,15 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("text_curation: the fused curation-gate UDF is evaluated once per row") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    val optimized = SparkEntry.queries("text_curation")(spark, dir).queryExecution.optimizedPlan
+    val gates = optimized.flatMap(_.expressions.flatMap(_.collect {
+      case u: ScalaUDF if u.udfName.contains("lang_quality_tokens") => u
+    }))
+    assert(gates.length == 1, optimized.toString)
+  }
+
   test("ann_cosine_topk: no cartesian of the data side (partial-heap pass)") {
     val p = plan("ann_cosine_topk")
     assert(!p.contains("CartesianProduct"), p.take(2000))

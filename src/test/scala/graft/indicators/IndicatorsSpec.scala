@@ -159,4 +159,22 @@ class IndicatorsSpec extends SparkTestBase {
     assert(math.abs(out(1).getAs[Double]("area_fraction_industrial") - 156.0 / 681) < 1e-12)
     assert(out(14).getAs[Double]("area_fraction_residential") == 0.0)
   }
+
+  test("roofFractionDistributionExact: buildings touching an RSU only along an edge read 0.0") {
+    import spark.implicits._
+    import graft.geom.Geo
+    def box(x0: Double, y0: Double, x1: Double, y1: Double) = Geo.toWkb(Geo.box(x0, y0, x1, y1))
+    val rsu = Seq((1, box(0, 0, 100, 100)), (2, box(0, 200, 100, 300)), (3, box(200, 0, 300, 100)))
+      .toDF("id_rsu", "the_geom")
+    // rsu 1: one building sharing its east edge (zero clipped area);
+    // rsu 2: one building inside; rsu 3: none
+    val b = Seq((box(100, 10, 120, 30), 5.0), (box(10, 210, 30, 230), 5.0))
+      .toDF("the_geom", "height_roof")
+    val out = RsuIndicators.roofFractionDistributionExact(rsu, b,
+      Seq((0.0, 10.0), (10.0, 20.0)), grid, Res)
+      .collect().map(r => r.getAs[Int]("id_rsu") ->
+        (r.getAs[Double]("roof_fraction_distribution_h0_10"),
+          r.getAs[Double]("roof_fraction_distribution_h10_20"))).toMap
+    assert(out == Map(1 -> (0.0, 0.0), 2 -> (1.0, 0.0), 3 -> (0.0, 0.0)))
+  }
 }

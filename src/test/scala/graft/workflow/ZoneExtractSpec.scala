@@ -3,8 +3,9 @@ package graft.workflow
 import graft.SparkTestBase
 
 /** The bbox branch of extractOSMZone (WorkflowOSM.groovy:719-775): SRID
-  * pick, envelope expansion, one-row zone tables, and the km² size guard —
-  * the config-driven wiring a user drives the workflow with offline. */
+  * pick, envelope expansion, WKB quads and their one-row zone tables, and
+  * the km² size guard — the config-driven wiring a user drives the
+  * workflow with offline. */
 class ZoneExtractSpec extends SparkTestBase {
 
   test("config bbox -> extractOSMZone -> zone tables + SRID + size guard") {
@@ -17,6 +18,10 @@ class ZoneExtractSpec extends SparkTestBase {
     val row = z.utmZoneTable.head
     assert(row.getAs[String]("id_zone") == "43.2_2.1_43.26_2.18")
     assert(row.getAs[Int]("srid") == 32631)
+    // the lazily built tables carry exactly the zone's WKB quads
+    assert(row.getAs[Array[Byte]]("the_geom").sameElements(z.utmZoneWkb))
+    assert(z.utmExtendedBboxTable.head.getAs[Array[Byte]]("the_geom")
+      .sameElements(z.utmExtendedBboxWkb))
     // the extended envelope strictly contains the zone bbox
     val e = z.osmEnvelopeExtended
     assert(e.minLon < 2.1 && e.maxLon > 2.18 && e.minLat < 43.2 && e.maxLat > 43.26)
